@@ -2,8 +2,8 @@
 
 `entry(spark)` runs the flagship RAG-shaped query (SURVEY §3.1 / §7.1) at
 sf0.001; `queries()` / `oracle_sql()` expose the SURVEY §2 operator
-inventory, implemented in `vector_database_app_spark/` and paired with
-DuckDB oracle SQL in `vector_database_app_spark/registry.py`.
+inventory: the Spark queries live in `vector_database_app_spark/registry.py`
+and their DuckDB oracle SQL in `vector_database_app_spark/oracles/`.
 """
 
 from __future__ import annotations
@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from vector_database_app_spark.registry import (  # noqa: E402
-    ORACLE,
-    QUERIES,
-    TWINS,
-)
+from vector_database_app_spark.registry import QUERIES, TWINS  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,6 +39,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for each oracle-checkable query; entries absent
     here (LSH/minhash internals, Arrow UDF stages) are rows-only by design."""
+    from vector_database_app_spark.oracles import ORACLE
+
     return dict(ORACLE)
 
 

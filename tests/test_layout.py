@@ -330,3 +330,82 @@ def test_zorder_compact_plan_has_no_single_partition_exchange(spark, tmp_path):
     probe = 100  # a non-hot 'a' value present in the data
     hits = sum(lo <= probe <= hi for lo, hi in ranges)
     assert hits < n_files  # pruning is real: some files excluded
+
+
+@pytest.fixture()
+def max_partition_bytes(spark):
+    """Set spark.sql.files.maxPartitionBytes for one test, then restore."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+
+    def _set(value: str) -> None:
+        spark.conf.set(key, value)
+
+    yield _set
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("134217728", 128 * 1024**2),
+        ("134217728b", 128 * 1024**2),
+        ("128m", 128 * 1024**2),
+        ("128mb", 128 * 1024**2),
+        ("128MB", 128 * 1024**2),
+        ("64kb", 64 * 1024),
+        ("1g", 1024**3),
+    ],
+)
+def test_conf_bytes_accepts_spark_units(spark, max_partition_bytes, value, expected):
+    max_partition_bytes(value)
+    got = layout.conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "1b")
+    assert got == expected
+
+
+def test_conf_bytes_names_the_key_on_bad_values(spark):
+    # Spark validates its own byte-size keys on set, so use a free key
+    key = "spark.vector_database_app_spark.test.bytes"
+    spark.conf.set(key, "1.5g")
+    try:
+        with pytest.raises(ValueError, match=key):
+            layout.conf_bytes(spark, key, "1b")
+    finally:
+        spark.conf.unset(key)
+
+
+def test_two_letter_unit_conf_builds_docs_parallel_queries(
+    spark, max_partition_bytes
+):
+    """'128mb' is a valid Spark value; building a _docs_parallel query
+    under it must not raise (it used to fail parsing '128m' as a float)."""
+    from vector_database_app_spark.registry import QUERIES
+
+    max_partition_bytes("128mb")
+    df = QUERIES["dedup_similarity_join"](spark, SF)
+    assert df.columns
+
+
+def test_scan_splits_estimate_walks_partition_dirs(spark, tmp_path, max_partition_bytes):
+    """A partitioned k=v/ layout must estimate the same split count as
+    the same files laid out flat; _/. entries are not data files."""
+    max_partition_bytes("64kb")
+    payload = [bytes(40 * 1024), bytes(50 * 1024), bytes(30 * 1024)]
+    flat, nested = tmp_path / "flat", tmp_path / "nested"
+    flat.mkdir()
+    for i, data in enumerate(payload):
+        (flat / f"part-{i}.parquet").write_bytes(data)
+        part = nested / f"k={i}"
+        part.mkdir(parents=True)
+        (part / f"part-{i}.parquet").write_bytes(data)
+        (part / f".part-{i}.parquet.crc").write_bytes(bytes(4096))
+    (nested / "_SUCCESS").write_bytes(b"")
+    (nested / "_temporary").mkdir()
+    (nested / "_temporary" / "part-x.parquet").write_bytes(bytes(512 * 1024))
+
+    want = layout.scan_splits_estimate(spark, str(flat))
+    assert want > 1
+    assert layout.scan_splits_estimate(spark, str(nested)) == want

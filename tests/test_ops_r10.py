@@ -27,7 +27,7 @@ def test_bin_values_integer_exact_on_bin_edges(spark):
     """Values sitting EXACTLY on bin edges (multiples of 0.25) land in
     the bin they open, negatives floor (not truncate), 4-decimal
     values adjacent to an edge stay on their side, and the DuckDB
-    oracle expression (registry ORACLE["quantile_histogram"]'s binned
+    oracle expression (oracles ORACLE["quantile_histogram"]'s binned
     CTE) produces byte-identical bins on the same inputs — the
     decimal-cast scaling is what makes all three engines (Spark,
     DuckDB, this pure-decimal reference) agree."""

@@ -11,7 +11,8 @@ import math
 import duckdb
 import pytest
 
-from vector_database_app_spark.registry import ORACLE, QUERIES
+from vector_database_app_spark.oracles import ORACLE
+from vector_database_app_spark.registry import QUERIES
 from vector_database_app_spark.schemas import DRIVER_TABLES
 
 

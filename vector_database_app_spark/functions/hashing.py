@@ -48,31 +48,8 @@ def sha256_hex(c: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-def md5_hex(c: Column | str) -> Column:
-    """Hex MD5 — oracle-portable (DuckDB `md5`)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.md5(c)
-
-
 def token_bucket_hash(c: Column | str) -> Column:
     """Non-negative int64 token hash < 2^31-1, via xxhash64 (JVM, seed 42).
     Engine-internal only (DuckDB cannot reproduce xxhash64)."""
     c = F.col(c) if isinstance(c, str) else c
     return F.pmod(F.xxhash64(c), F.lit(MINHASH_PRIME))
-
-
-def minhash_signature(hashes: Column, n_hashes: int = 16) -> Column:
-    """array<bigint> minhash signature over an array of int64 token hashes.
-
-    min over tokens of (a_i*h + b_i) mod P for each fixed permutation i.
-    Pure Catalyst higher-order functions — the whole signature is computed
-    inside the scan stage with no shuffle and no Python.
-    """
-    def perm_fn(a: int, b: int):
-        # closure (not lambda default args — PySpark counts those as params)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    sigs = [
-        F.array_min(F.transform(hashes, perm_fn(a, b))) for a, b in PERMS[:n_hashes]
-    ]
-    return F.array(*sigs)

@@ -577,7 +577,7 @@ def image_ahash(
     Arrow-batched mapInPandas; integers end to end after the decode,
     so the hash — and every banding/hamming decision downstream —
     replays exactly from a pinned literal table (the
-    media_oracle_literals contract)."""
+    oracles.media_literals contract)."""
 
     def hash_batches(
         batches: Iterator[pd.DataFrame],
@@ -817,7 +817,7 @@ def audio_fingerprint(
     scales every energy by g², preserving the strict inequality.
     Arrow-batched mapInPandas; the hash is a pure function of the
     payload, so the fixture table pins as literals
-    (media_oracle_literals contract)."""
+    (oracles.media_literals contract)."""
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

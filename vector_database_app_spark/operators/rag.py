@@ -366,11 +366,6 @@ def answer_prompts(prompts: DataFrame, backend: str = "stub") -> DataFrame:
     return prompts.mapInPandas(run, schema)
 
 
-def answer_prompts_stub(prompts: DataFrame) -> DataFrame:
-    """Back-compat alias: the deterministic stub backend."""
-    return answer_prompts(prompts, backend="stub")
-
-
 def hybrid_search(
     docs: DataFrame,
     emb: DataFrame,
@@ -573,13 +568,6 @@ def rrf_fusion(
             F.count(F.lit(1)).cast("bigint").alias("n_lists"),
         )
     )
-
-
-def fuse_results(text_hits: DataFrame, image_hits: DataFrame) -> DataFrame:
-    """Reference V6 fusion = plain concat of the two top-k lists
-    (`rag_search/vector_db.py:666`) → unionByName. No score renormalization
-    (documented quirk; scores from different spaces are not comparable)."""
-    return text_hits.unionByName(image_hits, allowMissingColumns=True)
 
 
 def source_list(hits: DataFrame) -> DataFrame:

@@ -21,6 +21,10 @@ co-location.
 
 from __future__ import annotations
 
+import math
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -67,6 +71,58 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
+
+
+#: Spark's byte-size suffixes (JavaUtils.byteStringAs): a bare number is
+#: bytes; k/m/g/t/p may carry a trailing b ('128m' == '128mb').
+_BYTE_SIZE = re.compile(r"(\d+)\s*(?:([kmgtp])b?|b)?")
+
+
+def conf_bytes(spark: SparkSession, key: str, default: str) -> int:
+    """A byte-size Spark conf (``spark.sql.files.maxPartitionBytes``,
+    ``openCostInBytes``, ...) in bytes, parsed as Spark parses it:
+    '134217728', '134217728b', '128m', '128MB', '64kb'. A value Spark
+    would reject raises ValueError naming the conf key."""
+    raw = spark.conf.get(key, default)
+    m = _BYTE_SIZE.fullmatch(raw.strip().lower())
+    if m is None:
+        raise ValueError(
+            f"{key}={raw!r} is not a byte size "
+            "(expected e.g. '134217728', '128m' or '128mb')"
+        )
+    return int(m[1]) * 1024 ** " kmgtp".index(m[2] or " ")
+
+
+def _data_file_sizes(path: str) -> list[int]:
+    """Sizes of the data files under a parquet path, walking partition
+    subdirectories (``k=v/``) and skipping ``_``/``.`` entries
+    (``_SUCCESS``, ``.crc``, ``_temporary``) as Spark's file index does."""
+    if not os.path.isdir(path):
+        return [os.stat(path).st_size]
+    sizes = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        sizes += [
+            os.stat(os.path.join(root, f)).st_size
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    return sizes
+
+
+def scan_splits_estimate(spark: SparkSession, path: str) -> int:
+    """Estimated scan-task count for a parquet path, from the file
+    catalog only (os.stat — NO Spark job): Spark packs/splits files at
+    spark.sql.files.maxPartitionBytes, charging openCostInBytes per
+    file. The estimate is ceil(total_bytes + n_files*openCost over
+    maxPartitionBytes), floored at 1 — exactly FilePartition's bin size
+    arithmetic, ignoring only the minPartitionNum floor (which would
+    raise, never lower, the true count)."""
+    files = _data_file_sizes(path)
+    max_pb = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "134217728b")
+    open_cost = conf_bytes(spark, "spark.sql.files.openCostInBytes", "4194304b")
+    total = sum(files) + open_cost * len(files)
+    return max(1, math.ceil(total / max_pb))
 
 
 def interleave_bits_expr(col_a, col_b, bits: int = 16):

@@ -61,7 +61,7 @@ def _mix(doc_id: int, salt: int) -> int:
 
 def synth_row(doc_id: int) -> tuple[int, str, str, float, int]:
     """One synthetic document, fully determined by its id. Every field has
-    a closed-form SQL twin (see registry ORACLE['pyds_synthetic_docs'])."""
+    a closed-form SQL twin (see oracles ORACLE['pyds_synthetic_docs'])."""
     n_words = 3 + _mix(doc_id, 1) % 8
     words = [_WORDS[_mix(doc_id, 2 + i) % len(_WORDS)] for i in range(n_words)]
     lang = _LANGS[_mix(doc_id, 0) % len(_LANGS)]

@@ -329,22 +329,6 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, *, output_mode: str = "complete"
-) -> None:
-    """Drain a stream with AvailableNow into an in-memory table `query_name`
-    (test/smoke harness; production sinks are parquet/Delta with exactly-once
-    file commit)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_stream_upsert_partitions(
     stream_df: DataFrame,
     out_dir: str,
