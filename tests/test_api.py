@@ -228,3 +228,249 @@ def test_w2v_dim_mismatch_on_reopen_raises(spark, w2v_db):
     )
     with pytest.raises(ValueError, match="16"):
         reopened.run_search({"text": "vector search"})
+
+
+# -- one evaluation per search, and the memoized chunk store ---------------
+# `run_search` persists the fused hits once and reads both the summary and
+# the source list from them; `chunks()` keeps the opened store until its
+# `_SUCCESS` marker changes. These tests pin the result against the old
+# two-evaluation composition, the job saving, the release of the cached
+# hits and the memo's invalidation.
+
+_PPTX_NS = (
+    'xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main" '
+    'xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main" '
+    'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/'
+    'relationships"'
+)
+
+
+def _deck_bytes(slides: list[tuple[str, bytes]]) -> bytes:
+    """A minimal pptx: one slide per ``(text, picture bytes)`` pair."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for n, (text, pic) in enumerate(slides, start=1):
+            z.writestr(
+                f"ppt/slides/slide{n}.xml",
+                f'<?xml version="1.0"?><p:sld {_PPTX_NS}><p:cSld><p:spTree>'
+                f'<p:sp><p:nvSpPr><p:cNvPr id="2" name="t"/></p:nvSpPr>'
+                f"<p:txBody><a:p><a:r><a:t>{text}</a:t></a:r></a:p>"
+                f"</p:txBody></p:sp>"
+                f'<p:pic><p:nvPicPr><p:cNvPr id="3" name="img"/></p:nvPicPr>'
+                f'<p:blipFill><a:blip r:embed="rId1"/></p:blipFill></p:pic>'
+                f"</p:spTree></p:cSld></p:sld>",
+            )
+            z.writestr(
+                f"ppt/slides/_rels/slide{n}.xml.rels",
+                '<?xml version="1.0"?><Relationships xmlns="http://schemas.'
+                'openxmlformats.org/package/2006/relationships">'
+                '<Relationship Id="rId1" Type="x" '
+                f'Target="../media/image{n}.png"/></Relationships>',
+            )
+            z.writestr(f"ppt/media/image{n}.png", pic)
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="module")
+def mm_db(spark, corpus, tmp_path_factory):
+    """The api corpus plus a two-slide deck, so image rows exist."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("api_corpus_mm")
+    shutil.copytree(corpus, root, dirs_exist_ok=True)
+    (root / "decks").mkdir()
+    (root / "decks" / "deck.pptx").write_bytes(
+        _deck_bytes(
+            [
+                ("vector search charts", b"\x89PNG chart of embedding rows"),
+                ("customer revenue slide", b"\x89PNG photo of a revenue"),
+            ]
+        )
+    )
+    vdb = VectorDatabase(spark, str(tmp_path_factory.mktemp("api_store_mm")))
+    assert vdb.vectorize_folder(str(root)) > 0
+    return vdb, root
+
+
+_IMG = base64.b64encode(b"\x89PNG chart of embedding rows").decode()
+
+
+def _two_pass_search(vdb, search_content, search_location=None, top_n=5):
+    """The pre-persist composition over the same opened store: evaluate
+    the hit plan once for the summary and again for the source list."""
+    from pyspark.sql import functions as F
+
+    from vector_database_app_spark.operators import rag
+
+    spark = vdb.spark
+    images = search_content.get("image") or []
+    query_images = None
+    if images:
+        query_images = spark.createDataFrame(
+            [(i, b64) for i, b64 in enumerate(images)],
+            "query_id int, b64 string",
+        ).select("query_id", F.unbase64("b64").alias("payload"))
+    hits = rag.run_search(
+        vdb.chunks(),
+        query_text=search_content.get("text"),
+        query_images=query_images,
+        top_n=top_n,
+        search_location=search_location,
+    )
+    prompts = rag.assemble_prompts(hits.withColumn("query_id", F.lit(0)))
+    rows = rag.answer_prompts(prompts, backend=vdb.response_model).collect()
+    return {
+        "response": rows[0].response if rows else "",
+        "sources": [r.asDict() for r in rag.source_list(hits).collect()],
+    }
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _search_cases(root, vdb):
+    deck = next(
+        r.doc_name
+        for r in vdb.chunks()
+        .filter("content_type = 'image'")
+        .select("doc_name")
+        .distinct()
+        .collect()
+    )
+    return {
+        "full": ({"text": "customer revenue orders"}, None),
+        "file": ({"text": "vector search charts"}, deck),
+        "folder": (
+            {"text": "vector search embedding"},
+            str(root / "reports") + "/",
+        ),
+        "text_image": (
+            {"text": "vector search charts", "image": [_IMG]},
+            None,
+        ),
+        "no_match": ({"text": "customer revenue"}, "/no/such/folder/"),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["full", "file", "folder", "text_image", "no_match"]
+)
+def test_single_evaluation_matches_two_pass_composition(spark, mm_db, case):
+    vdb, root = mm_db
+    content, loc = _search_cases(root, vdb)[case]
+    vdb.run_search(content, search_location=loc)  # the store memo is warm
+    new, new_jobs = _jobs_in_group(
+        spark,
+        f"api-new-{case}",
+        lambda: vdb.run_search(content, search_location=loc),
+    )
+    old, old_jobs = _jobs_in_group(
+        spark,
+        f"api-old-{case}",
+        lambda: _two_pass_search(vdb, content, search_location=loc),
+    )
+    assert new == old  # same response, same sources in the same order
+    if case == "no_match":
+        assert new == {"response": "", "sources": []}
+    else:
+        assert new["sources"]
+    if case == "text_image":
+        assert any(s["content_type"] == "image" for s in new["sources"])
+    assert new_jobs < old_jobs
+
+
+def _cache_state(spark):
+    """Ids of the persisted RDDs, and whether the cache manager is empty.
+    Ids, not a count: RDDs an earlier ingest local-checkpointed are
+    released by the JVM's GC at any time, so the count can fall during a
+    search; a search must never ADD an id."""
+    return (
+        set(spark.sparkContext._jsc.getPersistentRDDs().keys()),
+        spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+    )
+
+
+def _assert_released(spark, before):
+    rdds, cache_empty = _cache_state(spark)
+    assert rdds <= before[0], f"persisted RDDs kept: {rdds - before[0]}"
+    assert cache_empty == before[1]
+
+
+def test_search_releases_persisted_hits(spark, mm_db):
+    vdb, _ = mm_db
+    before = _cache_state(spark)
+    vdb.run_search({"text": "customer revenue orders"})
+    _assert_released(spark, before)
+    vdb.run_search({"text": "vector search charts", "image": [_IMG]})
+    _assert_released(spark, before)
+
+
+def test_failed_search_releases_persisted_hits(spark, mm_db, monkeypatch):
+    from vector_database_app_spark.operators import rag
+
+    def boom(hits):
+        raise RuntimeError("source list failed")
+
+    vdb, _ = mm_db
+    before = _cache_state(spark)
+    monkeypatch.setattr(rag, "source_list", boom)
+    with pytest.raises(RuntimeError, match="source list failed"):
+        vdb.run_search({"text": "spark join merge window"})
+    _assert_released(spark, before)
+
+
+def _doc_names(vdb, location=None):
+    out = vdb.run_search(
+        {"text": "vector search embedding rows"}, search_location=location
+    )
+    return {s["doc_name"] for s in out["sources"]}
+
+
+def test_store_memo_sees_appends_from_another_facade(
+    spark, corpus, tmp_path_factory
+):
+    save_dir = str(tmp_path_factory.mktemp("api_store_memo_b"))
+    a = VectorDatabase(spark, save_dir)
+    assert a.vectorize_folder(str(corpus)) > 0
+    assert _doc_names(a)
+    opened = a.chunks()
+    # unchanged store: the frame is reused, with no listing or schema job
+    warm, jobs = _jobs_in_group(spark, "api-memo-warm", a.chunks)
+    assert warm is opened and jobs == 0
+    extra = tmp_path_factory.mktemp("api_corpus_memo_b")
+    (extra / "fresh.txt").write_text("vector search embedding rows " * 20)
+    b = VectorDatabase(spark, save_dir)
+    assert b.vectorize_folder(str(extra)) > 0
+    fresh = next(
+        r.doc_name
+        for r in b.chunks().select("doc_name").distinct().collect()
+        if r.doc_name.endswith("/fresh.txt")
+    )
+    assert _doc_names(a, fresh) == {fresh}
+    assert a.chunks() is not opened
+
+
+def test_store_memo_sees_own_appends_and_noop_reingest(
+    spark, corpus, tmp_path_factory
+):
+    a = VectorDatabase(spark, str(tmp_path_factory.mktemp("api_store_memo_a")))
+    assert a.vectorize_folder(str(corpus)) > 0
+    assert not any(n.endswith("/own.txt") for n in _doc_names(a))
+    extra = tmp_path_factory.mktemp("api_corpus_memo_a")
+    (extra / "own.txt").write_text("vector search embedding rows " * 20)
+    assert a.vectorize_folder(str(extra)) > 0
+    full = a.run_search({"text": "vector search embedding rows"})
+    assert any(s["doc_name"].endswith("/own.txt") for s in full["sources"])
+    assert a.vectorize_folder(str(extra)) == 0
+    assert a.vectorize_folder(str(corpus)) == 0
+    assert a.run_search({"text": "vector search embedding rows"}) == full

@@ -173,6 +173,36 @@ def test_cosine_sql_path_matches_column_path(spark):
     assert got_sql[3] == (None, 0.0, 0.0)
 
 
+def test_cosine_sql_path_quotes_reserved_word_columns(spark):
+    """Columns named like a literal (`null`) or a keyword (`order`) pass
+    the identifier gate; the one-parse SQL must still resolve them as
+    columns, bit-equal to the F.col path, not as a NULL literal or a
+    parse error."""
+    from vector_database_app_spark.functions import vector as V
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0], [4.0, -5.0, 6.0]),
+            (2, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),
+            (3, [1e-8, 2e-8, 0.0], [1e8, -2e8, 3.5]),
+        ],
+        "id long, `null` array<double>, `order` array<double>",
+    )
+
+    def values(a, b):
+        out = df.select(
+            "id",
+            V.dot(a, b).alias("d"),
+            V.cosine(a, b).alias("c"),
+            V.cosine_rounded(a, b).alias("cr"),
+        )
+        return {r.id: (r.d, r.c, r.cr) for r in out.collect()}
+
+    got_sql = values("null", "order")
+    assert got_sql == values(F.col("null"), F.col("order"))
+    assert got_sql[1][0] == 1.0 * 4.0 + 2.0 * -5.0 + 3.0 * 6.0
+
+
 def test_cosine_identifier_gate_rejects_non_identifiers(spark):
     """Only plain identifiers may be spliced into the SQL text; any
     Column or non-identifier string must use the Column-API path (no

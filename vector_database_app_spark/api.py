@@ -9,9 +9,13 @@ unchanged in shape.
 Differences by design (SURVEY §1.4 / §2.9 normalizations):
 
 - State is a PARQUET chunk store under ``save_dir`` (one unified table with
-  a ``content_type`` discriminator), not two pickles; re-opening is a scan,
-  and every query is a lazy DataFrame plan until `run_search` collects the
-  (tiny) response dict.
+  a ``content_type`` discriminator), not two pickles. The opened store
+  frame is kept until the store's ``_SUCCESS`` marker changes (every
+  committed append rewrites it), so back-to-back searches skip the file
+  listing and schema inference. Each search is a lazy plan that runs
+  once: `run_search` persists the fused hits, builds the summary and the
+  source list from them, and releases them before it returns the (tiny)
+  response dict.
 - Per-file failures quarantine into rows with ``content_type='error'``
   instead of being printed and swallowed (quirk §2.9.6).
 - Ingest is idempotent by file hash (anti-join against the store BEFORE the
@@ -199,8 +203,27 @@ class VectorDatabase:
 
     def chunks(self) -> DataFrame | None:
         """The persisted chunk store as a DataFrame (lazy), or None before
-        the first ingest."""
-        return ingest.load_chunks(self.spark, self.store_path)
+        the first ingest.
+
+        A ``spark.read.parquet`` frame fixes its file listing when it is
+        opened, and opening one runs a schema-inference job. The frame is
+        therefore memoized keyed on the (st_mtime_ns, st_ino) of the
+        store's ``_SUCCESS`` marker, which every committed append —
+        from this facade or any other writer — rewrites. The marker is
+        read BEFORE the store is opened: an append that commits between
+        the two only makes the next call reopen. Without a marker the
+        store is opened on every call."""
+        try:
+            st = os.stat(os.path.join(self.store_path, "_SUCCESS"))
+        except FileNotFoundError:
+            return ingest.load_chunks(self.spark, self.store_path)
+        key = (st.st_mtime_ns, st.st_ino)
+        cached = getattr(self, "_chunks_cache", None)
+        if cached and cached[0] == key:
+            return cached[1]
+        frame = ingest.load_chunks(self.spark, self.store_path)
+        self._chunks_cache = (key, frame)
+        return frame
 
     # -- search (reference run_search) ------------------------------------
 
@@ -213,7 +236,12 @@ class VectorDatabase:
         """Reference `run_search` (vector_db.py:615-671). `search_content`
         is the reference's query dict: ``{"text": str}`` and/or
         ``{"image": [base64, ...]}``. Returns
-        ``{"response": str, "sources": [dict, ...]}``."""
+        ``{"response": str, "sources": [dict, ...]}``.
+
+        Like the reference, the hits are retrieved once: the fused hit
+        frame is persisted before the first collect, the summary and the
+        source list both read it, and it is unpersisted in a ``finally``
+        so a failed search leaves no cached blocks behind."""
         query_text = search_content.get("text")
         images = search_content.get("image") or []
         if query_text is None and not images:
@@ -239,13 +267,16 @@ class VectorDatabase:
             top_n=top_n,
             search_location=search_location,
             text_backend=self._query_text_backend(),
-        )
-        # the reference produces ONE summary over the fused text+image hits
-        # (:666-668) — collapse all modalities into a single prompt
-        one_query = hits.withColumn("query_id", F.lit(0))
-        prompts = rag.assemble_prompts(one_query)
-        answered = rag.answer_prompts(prompts, backend=self.response_model)
-        resp_rows = answered.collect()
-        response = resp_rows[0].response if resp_rows else ""
-        sources = [r.asDict() for r in rag.source_list(hits).collect()]
+        ).persist()
+        try:
+            # the reference produces ONE summary over the fused text+image
+            # hits (:666-668) — collapse all modalities into a single prompt
+            one_query = hits.withColumn("query_id", F.lit(0))
+            prompts = rag.assemble_prompts(one_query)
+            answered = rag.answer_prompts(prompts, backend=self.response_model)
+            resp_rows = answered.collect()
+            response = resp_rows[0].response if resp_rows else ""
+            sources = [r.asDict() for r in rag.source_list(hits).collect()]
+        finally:
+            hits.unpersist()
         return {"response": response, "sources": sources}
