@@ -174,11 +174,13 @@ def test_cosine_sql_path_matches_column_path(spark):
 
 
 def test_cosine_sql_path_quotes_reserved_word_columns(spark):
-    """Columns named like a literal (`null`) or a keyword (`order`) pass
-    the identifier gate; the one-parse SQL must still resolve them as
-    columns, bit-equal to the F.col path, not as a NULL literal or a
-    parse error."""
+    """Columns named like a literal (`null`) or a keyword (`order`) are
+    spliced through sqlexpr.ident; every one-parse SQL builder must
+    still resolve them as columns, bit-equal to the F.col path (or to
+    the same call over a plainly named column), not as a NULL literal
+    or a parse error."""
     from vector_database_app_spark.functions import vector as V
+    from vector_database_app_spark.operators import multimodal, search
 
     df = spark.createDataFrame(
         [
@@ -202,17 +204,60 @@ def test_cosine_sql_path_quotes_reserved_word_columns(spark):
     assert got_sql == values(F.col("null"), F.col("order"))
     assert got_sql[1][0] == 1.0 * 4.0 + 2.0 * -5.0 + 3.0 * 6.0
 
+    # the literal-axis builders and the hash banding over a column named
+    # `order`, `null` or `my vec` == the same call over `embedding` (at
+    # Spark 4.1's default, unquoted `order` still parses; `null` reads
+    # as a NULL literal and `my vec` is a parse error)
+    plain = df.select("id", F.col("order").alias("embedding"))
+    hashes = spark.createDataFrame(
+        [(1, 0), (2, 1), (3, 0xFF00FF), (4, -1), (5, 0xFF00FE)],
+        "doc_id long, ahash long",
+    )
+    near = multimodal.image_near_dups(hashes).collect()
+    assert {(r.id_a, r.id_b) for r in near} == {(1, 2), (3, 5)}
+
+    def by_id(frame, col):
+        rows = frame.select("id", col.alias("v")).collect()
+        return {r.id: r.v for r in rows}
+
+    axis = [0.5, -0.25, 1.0 / 3.0]
+    builders = (
+        lambda c: search._srp_bucket(c, 4, 3),
+        lambda c: search.pca_project_expr(c, axis),
+        lambda c: F.expr(V.dot_unrolled_sql(c, c, 3)),
+    )
+    for name in ("order", "null", "my vec"):
+        renamed = plain.withColumnRenamed("embedding", name)
+        for build in builders:
+            want = by_id(plain, build("embedding"))
+            assert by_id(renamed, build(name)) == want, name
+        got = multimodal.image_near_dups(
+            hashes.withColumnRenamed("ahash", name), hash_col=name
+        ).collect()
+        assert sorted(got) == sorted(near)
+
 
 def test_cosine_identifier_gate_rejects_non_identifiers(spark):
-    """Only plain identifiers may be spliced into the SQL text; any
-    Column or non-identifier string must use the Column-API path (no
-    injection, no parse surprises)."""
-    from vector_database_app_spark.functions.vector import _ident
+    """Column names reach generated SQL only through sqlexpr.ident: any
+    name is backtick-quoted (no injection, no parse surprises), a dotted
+    name reads the struct field F.col reads, and a Column is refused."""
+    from vector_database_app_spark.functions.sqlexpr import ident
 
-    assert _ident("embedding") == "embedding"
-    assert _ident("_qe") == "_qe"
-    assert _ident("a.b") is None
-    assert _ident("a b") is None
-    assert _ident("a-b") is None
-    assert _ident("1a") is None
-    assert _ident(F.col("a")) is None
+    assert ident("embedding") == "`embedding`"
+    assert ident("_qe") == "`_qe`"
+    assert ident("a.b") == "`a`.`b`"
+    assert ident("a b") == "`a b`"
+    assert ident("a-b") == "`a-b`"
+    assert ident("1a") == "`1a`"
+    assert ident("a`) + (`b") == "`a``) + (``b`"
+    with pytest.raises(TypeError):
+        ident(F.col("a"))
+    df = spark.createDataFrame(
+        [(1, 2, 3, 4, 5, (6, 7))],
+        "embedding int, _qe int, `a b` int, `a-b` int, `1a` int, "
+        "a struct<b: int, `order`: int>",
+    )
+    names = ["embedding", "_qe", "a b", "a-b", "1a", "a.b", "a.order"]
+    assert df.select([F.expr(ident(n)) for n in names]).collect() == (
+        df.select([F.col(n) for n in names]).collect()
+    )

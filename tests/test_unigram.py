@@ -7,8 +7,8 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
+from vector_database_app_spark.functions import sqlexpr
 from vector_database_app_spark.operators import unigram
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -84,7 +84,7 @@ def _count(word: str, pieces: list[dict], spark) -> int:
     row = (
         spark.range(1)
         .select(
-            unigram.match_fold_expr(F.lit(word), pieces).alias("n")
+            unigram.match_fold_expr(sqlexpr.slit(word), pieces).alias("n")
         )
         .collect()[0]
     )
@@ -216,7 +216,7 @@ def test_match_fold_parity_with_independent_reference(spark):
             [(w,) for w in words], "w string"
         ).select(
             "w",
-            unigram.match_fold_expr(F.col("w"), piece_dicts).alias("n"),
+            unigram.match_fold_expr("w", piece_dicts).alias("n"),
         )
         got = {r["w"]: r["n"] for r in df.collect()}
         order = unigram.encode_order(piece_dicts)

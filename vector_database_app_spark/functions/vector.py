@@ -18,23 +18,15 @@ candidate-generation half (LSH / IVF) lives in ``operators.search``.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: plain-identifier column names are safe to splice into a SQL snippet
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+from .sqlexpr import dlit, fold_dot, ident
 
 
 def _as_double(v: Column | str) -> Column:
     v = F.col(v) if isinstance(v, str) else v
     return v.cast("array<double>")
-
-
-def _ident(v: Column | str) -> str | None:
-    """The argument as a SQL identifier, or None if it isn't one."""
-    return v if isinstance(v, str) and _IDENT.match(v) else None
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -47,13 +39,12 @@ def _dot_sql(a: str, b: str) -> str:
     to construct and resolves to the identical expression tree
     (collect-verified bit-equal on the embeddings corpus).
 
-    Both identifiers are backtick-quoted, so a column named like a
+    Both names go through ``sqlexpr.ident``, so a column named like a
     literal or a keyword (``null``, ``order``) resolves as a column,
     exactly as ``F.col`` does."""
-    return (
-        f"aggregate(zip_with(CAST(`{a}` AS ARRAY<DOUBLE>), "
-        f"CAST(`{b}` AS ARRAY<DOUBLE>), (x, y) -> x * y), "
-        f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    return fold_dot(
+        f"CAST({ident(a)} AS ARRAY<DOUBLE>)",
+        f"CAST({ident(b)} AS ARRAY<DOUBLE>)",
     )
 
 
@@ -62,8 +53,8 @@ def _cosine_sql(a: str, b: str) -> str:
     na = f"sqrt({_dot_sql(a, a)})"
     nb = f"sqrt({_dot_sql(b, b)})"
     return (
-        f"CASE WHEN ({na} * {nb}) > CAST(0.0 AS DOUBLE) "
-        f"THEN {d} / ({na} * {nb}) ELSE CAST(0.0 AS DOUBLE) END"
+        f"CASE WHEN ({na} * {nb}) > {dlit(0.0)} "
+        f"THEN {d} / ({na} * {nb}) ELSE {dlit(0.0)} END"
     )
 
 
@@ -73,9 +64,8 @@ def dot(a: Column | str, b: Column | str) -> Column:
     Reference equivalent: the matmul inside sklearn cosine_similarity
     (`rag_search/vector_db.py:692`).
     """
-    sa, sb = _ident(a), _ident(b)
-    if sa and sb:
-        return F.expr(_dot_sql(sa, sb))
+    if isinstance(a, str) and isinstance(b, str):
+        return F.expr(_dot_sql(a, b))
     return F.aggregate(
         F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -99,9 +89,8 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     whole search the first time an all-OOV query or chunk appears
     (advisor r3 finding). Values for nonzero vectors are bit-identical
     to the unguarded form."""
-    sa, sb = _ident(a), _ident(b)
-    if sa and sb:
-        return F.expr(_cosine_sql(sa, sb))
+    if isinstance(a, str) and isinstance(b, str):
+        return F.expr(_cosine_sql(a, b))
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > F.lit(0.0), dot(a, b) / denom).otherwise(
         F.lit(0.0)
@@ -113,9 +102,8 @@ def cosine_rounded(a: Column | str, b: Column | str, scale: int = 6) -> Column:
     oracle-checked queries (FIXTURES.md determinism rules): ranking and
     threshold predicates are evaluated on the *rounded* value so float
     last-ulp differences across engines cannot flip results."""
-    sa, sb = _ident(a), _ident(b)
-    if sa and sb:
-        return F.expr(f"round({_cosine_sql(sa, sb)}, {int(scale)})")
+    if isinstance(a, str) and isinstance(b, str):
+        return F.expr(f"round({_cosine_sql(a, b)}, {int(scale)})")
     return F.round(cosine(a, b), scale)
 
 
@@ -166,6 +154,7 @@ def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
     cost ~0.5 ms per 64-dim pair. Use for HOT pair-scoring loops; the
     Column-API fold stays the default elsewhere (compact plans, arbitrary
     Column inputs)."""
+    a, b = ident(a), ident(b)
     terms = " + ".join(
         f"(CAST(element_at({a}, {i + 1}) AS DOUBLE) * "
         f"CAST(element_at({b}, {i + 1}) AS DOUBLE))"

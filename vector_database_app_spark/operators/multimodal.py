@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sqlexpr import ident
+
 #: Metadata derived for any binary payload without decoding it.
 BINARY_META_SCHEMA = T.StructType(
     [
@@ -627,7 +629,7 @@ def image_near_dups(
             *[
                 F.struct(
                     F.lit(i).alias("band_ix"),
-                    F.expr(f"({hash_col} >> {8 * i}) & 255").alias(
+                    F.expr(f"({ident(hash_col)} >> {8 * i}) & 255").alias(
                         "band_key"
                     ),
                 )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqlexpr import dlit, fold_dot, ident
 from ..functions.vector import cosine_rounded
 
 #: rounding applied to ADC partial sums — keeps scores accumulation-order
@@ -54,13 +55,6 @@ def _subspace_cols(vec_col: str, m: int, dim: int) -> list:
         )
         for s in range(m)
     ]
-
-
-def _dlit(v: float) -> str:
-    """Exact double literal for generated SQL: repr round-trips through
-    Java Double.parseDouble bit-for-bit, and the CAST folds at plan
-    time (ConstantFolding), so this is free at execution."""
-    return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def _l2_argmin_code(sub_name: str, codebook_rows):
@@ -87,17 +81,16 @@ def _l2_argmin_code(sub_name: str, codebook_rows):
     Same arithmetic per entry, so codes are bit-identical (pinned-
     codebook parity in tests/test_pq.py)."""
     entries = ", ".join(
-        f"struct(array({', '.join(_dlit(v) for v in c)}) AS c, "
-        f"{_dlit(sum(v * v for v in c) / 2.0)} AS nh, {-j} AS neg_code)"
+        f"struct(array({', '.join(map(dlit, c))}) AS c, "
+        f"{dlit(sum(v * v for v in c) / 2.0)} AS nh, {-j} AS neg_code)"
         for j, c in codebook_rows
     )
     # neg_code: array_max's struct ordering breaks score ties toward
     # the LOWEST code id
     return F.expr(
         f"CAST(-(array_max(transform(array({entries}), e -> "
-        f"struct(round(aggregate(zip_with({sub_name}, e.c, (x, y) -> x * y), "
-        f"{_dlit(0.0)}, (acc, x) -> acc + x) - e.nh, {_ADC_SCALE}) AS score, "
-        f"e.neg_code AS neg_code))).neg_code) AS INT)"
+        f"struct(round({fold_dot(ident(sub_name), 'e.c')} - e.nh, "
+        f"{_ADC_SCALE}) AS score, e.neg_code AS neg_code))).neg_code) AS INT)"
     )
 
 
@@ -228,18 +221,19 @@ def pq_encode(
     per_s = []
     for s in range(m):
         entries = ", ".join(
-            f"named_struct('c', array({', '.join(_dlit(v) for v in c)}), "
-            f"'nh', {_dlit(sum(v * v for v in c) / 2.0)}, 'nj', {-j})"
+            f"named_struct('c', array({', '.join(map(dlit, c))}), "
+            f"'nh', {dlit(sum(v * v for v in c) / 2.0)}, 'nj', {-j})"
             for j, c in books[s]
         )
         per_s.append(f"array({entries})")
     books_lit = f"array({', '.join(per_s)})"
+    sub_vec = (
+        f"slice(CAST({ident(vec_col)} AS ARRAY<DOUBLE>), s * {sub} + 1, {sub})"
+    )
     codes = F.expr(
         f"transform(sequence(0, {m - 1}), s -> "
         f"CAST(-(array_max(transform(element_at({books_lit}, s + 1), "
-        f"t -> struct(round(aggregate(zip_with("
-        f"slice(CAST({vec_col} AS ARRAY<DOUBLE>), s * {sub} + 1, {sub}), "
-        f"t.c, (x, y) -> x * y), {_dlit(0.0)}, (acc, x) -> acc + x) "
+        f"t -> struct(round({fold_dot(sub_vec, 't.c')} "
         f"- t.nh, {_ADC_SCALE}) AS score, t.nj AS neg_code))"
         f").neg_code) AS INT))"
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqlexpr import dlit, fold_dot, ident
 from ..functions.vector import cosine_rounded
 
 
@@ -323,14 +324,7 @@ def _srp_bucket(vec_col: str, n_bits: int, dim: int) -> Column:
     F.when exactly; values bit-identical (SRP oracles re-verified)."""
     import hashlib
 
-    if not isinstance(vec_col, str):
-        # a Column's SQL rendering is not guaranteed re-parseable —
-        # require the name (every in-repo caller passes one)
-        raise TypeError(
-            "_srp_bucket takes the vector COLUMN NAME (generated-SQL "
-            f"form); got {type(vec_col).__name__}"
-        )
-    name = vec_col
+    name = ident(vec_col)
     terms = []
     for bit in range(n_bits):
         signs = ", ".join(
@@ -339,13 +333,15 @@ def _srp_bucket(vec_col: str, n_bits: int, dim: int) -> Column:
             else "-1.0D"
             for j in range(dim)
         )
+        # not sqlexpr.fold_dot: SQL lambda names print in the plan, and
+        # this fold has always bound (x, s)
         proj = (
             f"aggregate(zip_with(CAST({name} AS ARRAY<DOUBLE>), "
             f"array({signs}), (x, s) -> x * s), "
-            f"CAST('0.0' AS DOUBLE), (acc, x) -> acc + x)"
+            f"{dlit(0.0)}, (acc, x) -> acc + x)"
         )
         terms.append(
-            f"(CASE WHEN {proj} >= CAST('0.0' AS DOUBLE) "
+            f"(CASE WHEN {proj} >= {dlit(0.0)} "
             f"THEN CAST({1 << bit} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         )
     if not terms:
@@ -1044,29 +1040,18 @@ def pca_train(
     return comps, [float(x) for x in model.explainedVariance]
 
 
-def pca_project_expr(vec_col, component: list[float]):
-    """Dot product of a vector column with one literal principal axis —
-    `zip_with` multiply + `aggregate` sum, inside codegen, no UDF (the
-    projection at serving time must not cost a python boundary).
+def pca_project_expr(vec_col: str, component: list[float]) -> Column:
+    """Dot product of the vector column NAMED `vec_col` with one literal
+    principal axis — `zip_with` multiply + `aggregate` sum, inside
+    codegen, no UDF (the projection at serving time must not cost a
+    python boundary).
 
-    Emitted as ONE generated-SQL F.expr when `vec_col` is a column name
-    (every in-repo caller): the Column-API form issued one py4j call
-    per literal — 64 per axis, ~2k per pca_search build (the pq_encode
-    plan-cost lesson, PERF.md r7). repr round-trips doubles exactly and
-    the CASTs constant-fold, so values are bit-identical."""
-    if isinstance(vec_col, str):
-        arr = "array(" + ", ".join(
-            f"CAST('{float(x)!r}' AS DOUBLE)" for x in component
-        ) + ")"
-        return F.expr(
-            f"aggregate(zip_with(CAST({vec_col} AS ARRAY<DOUBLE>), {arr}, "
-            f"(x, y) -> x * y), CAST('0.0' AS DOUBLE), (acc, x) -> acc + x)"
-        )
-    comp = F.array(*[F.lit(float(x)) for x in component])
-    prods = F.zip_with(
-        vec_col.cast("array<double>"), comp, lambda x, y: x * y
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+    Emitted as ONE generated-SQL F.expr: the Column-API form issued one
+    py4j call per literal — 64 per axis, ~2k per pca_search build (the
+    pq_encode plan-cost lesson, PERF.md r7). repr round-trips doubles
+    exactly and the CASTs constant-fold, so values are bit-identical."""
+    arr = f"array({', '.join(map(dlit, component))})"
+    return F.expr(fold_dot(f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)", arr))
 
 
 def pca_search(
@@ -1105,18 +1090,12 @@ def pca_search(
     # add order as the previous sum() of per-axis products, so scores
     # are bit-identical (pinned oracle re-verified).
     axes_lit = "array(" + ", ".join(
-        "array(" + ", ".join(
-            f"CAST('{float(x)!r}' AS DOUBLE)" for x in comp
-        ) + ")"
-        for comp in components
+        f"array({', '.join(map(dlit, comp))})" for comp in components
     ) + ")"
 
     def _proj(col_name: str) -> Column:
-        return F.expr(
-            f"transform({axes_lit}, a -> aggregate(zip_with("
-            f"CAST({col_name} AS ARRAY<DOUBLE>), a, (x, y) -> x * y), "
-            f"CAST('0.0' AS DOUBLE), (acc, x) -> acc + x))"
-        )
+        vec = f"CAST({ident(col_name)} AS ARRAY<DOUBLE>)"
+        return F.expr(f"transform({axes_lit}, a -> {fold_dot(vec, 'a')})")
 
     coarse = F.aggregate(
         F.zip_with(F.col("_pc"), F.col("_qc"), lambda x, y: x * y),

@@ -27,12 +27,11 @@ vocab side when it fits.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..functions.sqlexpr import slit
 
 #: Merge-table row: (rank, left_sym, right_sym, merged, pair_count).
 MERGE_SCHEMA = (
@@ -115,11 +114,6 @@ def merge_step_expr(sym_col: Column, left: str, right: str) -> Column:
     )
 
 
-#: symbols safe to splice into a SQL string literal (no quote/backslash
-#: escaping needed — anything else falls back to the Column builder)
-_SQL_SAFE_SYM = re.compile(r"^[^'\\]*$")
-
-
 def merge_step_sql(inner: str, left: str, right: str) -> str:
     """The EXACT SQL text of ``merge_step_expr`` — same aggregate fold,
     same try_element_at tail probe, same CASE arms — so the chained
@@ -128,12 +122,11 @@ def merge_step_sql(inner: str, left: str, right: str) -> str:
     12-merge PINNED table at every query construction; the SQL text is
     one parse). Collect-verified identical to the Column form on the
     corpus vocabulary (tests/test_bpe.py pins both paths)."""
-    merged = left + right
     return (
         f"aggregate({inner}, CAST(array() AS ARRAY<STRING>), "
-        f"(acc, x) -> CASE WHEN ((try_element_at(acc, -1) = '{left}') "
-        f"AND (x = '{right}')) THEN concat(slice(acc, 1, size(acc) - 1), "
-        f"array('{merged}')) ELSE concat(acc, array(x)) END)"
+        f"(acc, x) -> CASE WHEN ((try_element_at(acc, -1) = {slit(left)}) "
+        f"AND (x = {slit(right)})) THEN concat(slice(acc, 1, size(acc) - 1), "
+        f"array({slit(left + right)})) ELSE concat(acc, array(x)) END)"
     )
 
 
@@ -145,18 +138,13 @@ def apply_merges_expr(sym_col: Column | str, merges: list[dict]) -> Column:
     ``sym_col`` may be a Column (per-node Column builder) or a SQL
     snippet string (e.g. ``"split(w, '')"``): the string form renders
     the whole chain as one generated-SQL text parsed in a single round
-    trip — the same expression tree, built ~25× cheaper. Symbols that
-    would need escaping inside a SQL string literal fall back to the
-    Column builder."""
-    if isinstance(sym_col, str) and all(
-        _SQL_SAFE_SYM.match(m["left_sym"]) and _SQL_SAFE_SYM.match(m["right_sym"])
-        for m in merges
-    ):
+    trip — the same expression tree, built ~25× cheaper."""
+    if isinstance(sym_col, str):
         out_sql = sym_col
         for m in merges:
             out_sql = merge_step_sql(out_sql, m["left_sym"], m["right_sym"])
         return F.expr(out_sql)
-    out = F.expr(sym_col) if isinstance(sym_col, str) else sym_col
+    out = sym_col
     for m in merges:
         out = merge_step_expr(out, m["left_sym"], m["right_sym"])
     return out

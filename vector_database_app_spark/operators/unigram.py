@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..functions.sqlexpr import slit
 from . import tokenize
 
 #: Piece-table row schema (rank by final expected count, ties on piece).
@@ -338,30 +339,21 @@ def encode_order(pieces: list[dict]) -> list[str]:
     )
 
 
-def match_fold_expr(w: Column | str, pieces: list[dict]) -> Column:
+def match_fold_expr(w: str, pieces: list[dict]) -> Column:
     """Token count of a word under priority-ordered global replace
     (see module docstring — NOT WordPiece longest-match-at-position) —
     fold `replace(piece -> MARK)` in priority order, then LENGTH: every
     matched piece is one marker char, every uncovered char one token.
     Pure JVM column expressions on the distinct-word frame.
 
-    A string ``w`` is a SQL snippet (e.g. a column name): the whole
-    replace chain is then rendered as one generated-SQL text and parsed
-    in a single py4j round trip — the identical expression tree, built
-    without one gateway call per replace node (r12; same pattern as
-    tokenize.apply_merges_expr). Pieces needing escaping fall back."""
-    order = encode_order(pieces)
-    if isinstance(w, str) and all(
-        tokenize._SQL_SAFE_SYM.match(p) for p in order
-    ):
-        out_sql = w
-        for p in order:
-            out_sql = f"replace({out_sql}, '{p}', '{_MARK}')"
-        return F.expr(f"length({out_sql})")
-    out = F.expr(w) if isinstance(w, str) else w
-    for p in order:
-        out = F.replace(out, F.lit(p), F.lit(_MARK))
-    return F.length(out)
+    ``w`` is a SQL snippet (a column name, or ``sqlexpr.slit(word)``):
+    the whole replace chain is rendered as one generated-SQL text and
+    parsed in a single py4j round trip instead of one gateway call per
+    replace node (same pattern as tokenize.apply_merges_expr)."""
+    out_sql = w
+    for p in encode_order(pieces):
+        out_sql = f"replace({out_sql}, {slit(p)}, {slit(_MARK)})"
+    return F.expr(f"length({out_sql})")
 
 
 def unigram_encode_counts(
@@ -388,7 +380,7 @@ def unigram_encode_counts(
         .distinct()
         .select(
             "w",
-            match_fold_expr(F.col("w"), pieces)
+            match_fold_expr("w", pieces)
             .cast("bigint")
             .alias("w_tokens"),
             F.length("w").cast("bigint").alias("w_chars"),

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from . import caching
 from .functions import text as TX
 from .functions.hashing import sha256_hex
+from .functions.sqlexpr import dlit, fold_dot, ident
 from .functions.vector import cosine_rounded
 from .operators import (
     dedup,
@@ -6652,7 +6653,7 @@ def q_tokenizer_fertility_compare(spark, sf_dir):
             )
             .cast("bigint")
             .alias("w_bpe"),
-            unigram.match_fold_expr(F.col("w"), unigram.PINNED_PIECES)
+            unigram.match_fold_expr("w", unigram.PINNED_PIECES)
             .cast("bigint")
             .alias("w_uni"),
         )
@@ -8506,17 +8507,11 @@ def _opq_rotate_expr(vec_col: str):
     already stand on)."""
     from .pca_oracle_literals import PINNED_OPQ_ROTATION  # noqa: PLC0415
 
-    terms = []
-    for axis in PINNED_OPQ_ROTATION:
-        arr = (
-            "array("
-            + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in axis)
-            + ")"
-        )
-        terms.append(
-            f"aggregate(zip_with(CAST({vec_col} AS ARRAY<DOUBLE>), {arr}, "
-            f"(x, y) -> x * y), CAST('0.0' AS DOUBLE), (acc, x) -> acc + x)"
-        )
+    vec = f"CAST({ident(vec_col)} AS ARRAY<DOUBLE>)"
+    terms = [
+        fold_dot(vec, f"array({', '.join(map(dlit, axis))})")
+        for axis in PINNED_OPQ_ROTATION
+    ]
     return F.expr("array(" + ", ".join(terms) + ")")
 
 
